@@ -126,7 +126,7 @@ _MODULES = (
 # integer counts, pinned-expression scores), modularity_nation_partition
 # (graph.py — Newman-Girvan Q, exactly rational via the single-
 # denominator form). All
-# 3-SF + x4 verified at staging time (tools/verify_staged.py) AND
+# 3-SF + x4 verified at staging time (tools/differential.py) AND
 # re-verified on a x16 replication; dedicated staged tests throughout;
 # whitelist entries pre-added for the seven that plan 1-row/tiny
 # crossJoins or bounded non-equi probes (cusum, hits, ndcg, stump, kmv,

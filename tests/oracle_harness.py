@@ -1,15 +1,21 @@
-"""Local replica of the driver's Spark-vs-DuckDB differential check.
+"""Spark-vs-DuckDB differential harness: the compare, the DuckDB view
+builder and the fixture transforms (xN replica, 4-file split, conf axes)
+shared by the test suite and ``tools/differential.py``.
 
-Mirrors the contract in ``__spark_entry__.py``: run the Spark query and the
-oracle SQL on the same parquet tables, then compare row count, column-name
-set, and order-insensitive values (columns sorted by name, rows sorted by
-canonical repr, exact equality — the driver hashes, so near-equality is a
-FAIL here too).
+The compare mirrors the contract in ``__spark_entry__.py``: run the Spark
+query and the oracle SQL on the same parquet tables, then compare row count,
+column-name set, and order-insensitive values (columns sorted by name, rows
+sorted by canonical repr, exact equality — the driver hashes, so
+near-equality is a FAIL here too).
 """
 
 from __future__ import annotations
 
+import functools
+import json
 import math
+import os
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from decimal import Decimal
 from typing import Any
@@ -18,15 +24,23 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-from talkinghead_datapipeline_spark.catalog import TPCH_TABLES, table_path
+from talkinghead_datapipeline_spark.catalog import TPCH_TABLES, load_table, table_path
 
 
 def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """One view per catalog table present under ``sf_dir``, whether stored
+    as a single parquet file or as a directory of part files (how Spark
+    writes a table). Absent tables get no view: DuckDB binds a view to its
+    files on creation, so a crafted fixture holding only some tables would
+    otherwise fail before the oracle runs."""
     con = duckdb.connect()
     for t in TPCH_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')"
-        )
+        p = table_path(sf_dir, t)
+        if os.path.isdir(p):
+            p = os.path.join(p, "*.parquet")
+        elif not os.path.exists(p):
+            continue
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     return con
 
 
@@ -110,51 +124,134 @@ def compare_frames(name: str, spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame)
     return res
 
 
-def run_compare(spark, sf_dir: str, name: str, spark_fn, oracle: str) -> CompareResult:
-    spark_pdf = spark_fn(spark, sf_dir).toPandas()
+def oracle_frame(sf_dir: str, oracle: str) -> pd.DataFrame:
     con = duckdb_connection(sf_dir)
     try:
-        oracle_pdf = con.execute(oracle).fetchdf()
+        return con.execute(oracle).fetchdf()
     finally:
         con.close()
-    return compare_frames(name, spark_pdf, oracle_pdf)
 
 
-def _canon_frame(pdf):
-    cols = sorted(pdf.columns)
-    return pdf[cols].sort_values(cols).reset_index(drop=True)
+def run_compare(spark, sf_dir: str, name: str, spark_fn, oracle: str) -> CompareResult:
+    spark_pdf = spark_fn(spark, sf_dir).toPandas()
+    return compare_frames(name, spark_pdf, oracle_frame(sf_dir, oracle))
 
 
-def assert_split_invariance(spark, sf_dir, tmp_path, query_fn, table):
-    """Axis 1 of the three-axis invariance contract for a staged query:
-    a 4-file re-layout of its input table must reproduce the frame
-    bit-for-bit (canonical column/row order; exact value equality)."""
-    from talkinghead_datapipeline_spark.catalog import load_table
+# Fact table -> key columns shifted by ``i * REPLICA_OFFSET`` in replica i.
+# orders and lineitem shift the order key together so they still join; FK
+# columns into the x1 dimension tables are not shifted, so every fact:dim
+# ratio grows N-fold (documents become exact-duplicate clusters of N, and
+# per-user event streams grow N-fold since user ids stay put).
+REPLICA_SHIFT = {
+    "orders": ["o_orderkey"],
+    "lineitem": ["l_orderkey"],
+    "events": ["event_id"],
+    "documents": ["doc_id"],
+    "embeddings": ["vec_id"],
+}
+REPLICA_OFFSET = 1_000_000_000
 
-    load_table(spark, sf_dir, table).repartition(4).write.parquet(
-        str(tmp_path / f"{table}.parquet")
-    )
-    base = _canon_frame(query_fn(spark, sf_dir).toPandas())
-    split = _canon_frame(query_fn(spark, str(tmp_path)).toPandas())
-    assert base.equals(split), f"{table}: layout-dependent result"
+
+def build_replica(spark, src: str, out: str, replicas: int) -> str:
+    """Write the key-shifted x``replicas`` replica of ``src`` under ``out``.
+
+    Built tables are reused only while ``MANIFEST.json`` names the same
+    source and scheme, and only if the table's ``_SUCCESS`` marker exists:
+    Spark writes the marker last, so a build killed mid-table is redone.
+    The manifest is written after the last table for the same reason."""
+    from pyspark.sql import functions as F
+
+    manifest_path = os.path.join(out, "MANIFEST.json")
+    manifest = {
+        "sf_dir": os.path.abspath(src),
+        "scheme": {"shift": REPLICA_SHIFT, "offset": REPLICA_OFFSET, "replicas": replicas},
+    }
+    try:
+        with open(manifest_path) as fh:
+            fresh = json.load(fh) == manifest
+    except (OSError, json.JSONDecodeError):
+        fresh = False
+    os.makedirs(out, exist_ok=True)
+    for name in TPCH_TABLES:
+        dst = table_path(out, name)
+        if fresh and os.path.exists(os.path.join(dst, "_SUCCESS")):
+            continue
+        df = load_table(spark, src, name)
+        if name == "events":
+            # keep DuckDB's naive-timestamp semantics: write NTZ micros so
+            # the oracle sees the same wall-clock values as the native
+            # TIMESTAMP(NANOS) fixture (instants are unchanged)
+            df = df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+        if name in REPLICA_SHIFT:
+            parts = [
+                df.withColumns(
+                    {c: F.col(c) + F.lit(i * REPLICA_OFFSET) for c in REPLICA_SHIFT[name]}
+                )
+                for i in range(replicas)
+            ]
+            df = functools.reduce(lambda a, b: a.unionAll(b), parts)
+            if name == "events":
+                # the streaming oracles model the landing-file SEQUENCE
+                # (watermark late-drops are file-order-dependent by
+                # design); keep the native single-sorted-file model
+                df = df.orderBy("ts", "event_id").coalesce(1)
+            else:
+                df = df.repartition(8)
+        df.write.mode("overwrite").parquet(dst)
+    with open(manifest_path, "w") as fh:
+        json.dump(manifest, fh, indent=1)
+    return out
+
+
+def write_split_fixture(spark, sf_dir: str, out, tables=TPCH_TABLES) -> str:
+    """Re-write ``tables`` of ``sf_dir`` under ``out`` as 4 round-robin
+    parquet files each: different per-file row sets AND a different
+    within-file row order than the source."""
+    for name in tables:
+        load_table(spark, sf_dir, name).repartition(4).write.mode(
+            "overwrite"
+        ).parquet(table_path(out, name))
+    return str(out)
+
+
+# Invariance axis -> (conf key, value to run with given the session's value)
+CONF_AXES = {
+    "partitions": ("spark.sql.shuffle.partitions", lambda cur: "7"),
+    "aqe": ("spark.sql.adaptive.enabled", lambda cur: "false" if cur == "true" else "true"),
+}
+
+
+@contextmanager
+def conf_axes(spark, *axes: str):
+    """Run the block with each named ``CONF_AXES`` axis moved off the
+    session's setting, and restore every setting even on failure (a leaked
+    setting would skew every later query in the shared session)."""
+    saved = {}
+    try:
+        for axis in axes:
+            key, alt = CONF_AXES[axis]
+            saved[key] = spark.conf.get(key)
+            spark.conf.set(key, alt(saved[key]))
+        yield
+    finally:
+        for key, value in saved.items():
+            spark.conf.set(key, value)
+
+
+def assert_split_invariance(spark, sf_dir, tmp_path, query_fn, *tables):
+    """Axis 1 of the three-axis invariance contract: a 4-file re-layout of
+    the query's input ``tables`` must reproduce the frame exactly."""
+    write_split_fixture(spark, sf_dir, tmp_path, tables)
+    base = query_fn(spark, sf_dir).toPandas()
+    res = compare_frames(query_fn.__name__, query_fn(spark, str(tmp_path)).toPandas(), base)
+    assert res.ok, f"layout-dependent result: {res}"
 
 
 def assert_conf_axis_invariance(spark, sf_dir, query_fn):
     """Axes 2+3: shuffle-partition count and AQE toggle must reproduce the
-    frame exactly — partial-merge order cannot move an exact pipeline.
-    Restores both confs even on failure (a leaked setting would skew every
-    later test in the shared session)."""
-    base = _canon_frame(query_fn(spark, sf_dir).toPandas())
-    sp = spark.conf.get("spark.sql.shuffle.partitions")
-    aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "7")
-        spark.conf.set(
-            "spark.sql.adaptive.enabled",
-            "false" if aqe == "true" else "true",
-        )
-        alt = _canon_frame(query_fn(spark, sf_dir).toPandas())
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", sp)
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    assert base.equals(alt), "conf-axis-dependent result"
+    frame exactly — partial-merge order cannot move an exact pipeline."""
+    base = query_fn(spark, sf_dir).toPandas()
+    with conf_axes(spark, *CONF_AXES):
+        alt = query_fn(spark, sf_dir).toPandas()
+    res = compare_frames(query_fn.__name__, alt, base)
+    assert res.ok, f"conf-axis-dependent result: {res}"

@@ -21,7 +21,7 @@ from talkinghead_datapipeline_spark.queries.timeseries import (
     ACF_LJUNG_BOX_ORACLE,
     acf_ljung_box_daily,
 )
-from tests.oracle_harness import run_compare
+from tests.oracle_harness import duckdb_connection, run_compare
 
 
 @pytest.mark.slow  # heavy tier (see conftest; VERDICT r14 #3)
@@ -87,8 +87,6 @@ def _write_orders(spark, tmp_path, rows):
 
 
 def test_crafted_weekly_periodicity(spark, tmp_path):
-    import duckdb
-
     # 16 weeks of a strong weekly pattern: lag-7 autocorrelation must be
     # the largest positive coefficient by far
     t0 = dt.date(2026, 1, 5)
@@ -103,11 +101,7 @@ def test_crafted_weekly_periodicity(spark, tmp_path):
     assert out[7]["r_ppm"] > 900_000  # near-perfect weekly ACF
     assert out[7]["r_ppm"] > max(out[k]["r_ppm"] for k in range(1, 7))
     assert out[7]["lb_q_scaled"] > out[1]["lb_q_scaled"]
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW orders AS SELECT * FROM read_parquet("
-        f"'{tmp_path}/orders.parquet/*.parquet')"
-    )
+    con = duckdb_connection(tmp_path)
     odf = con.execute(ACF_LJUNG_BOX_ORACLE).fetchdf().set_index("lag")
     con.close()
     for k, r in out.items():
@@ -116,8 +110,6 @@ def test_crafted_weekly_periodicity(spark, tmp_path):
 
 
 def test_crafted_constant_series_null_guard(spark, tmp_path):
-    import duckdb
-
     t0 = dt.date(2026, 1, 5)
     rows = [(i, t0 + dt.timedelta(days=i), 500.0) for i in range(30)]
     _write_orders(spark, tmp_path, rows)
@@ -125,11 +117,7 @@ def test_crafted_constant_series_null_guard(spark, tmp_path):
     assert len(out) == 7
     for r in out:
         assert r["r_ppm"] is None and r["lb_q_scaled"] is None
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW orders AS SELECT * FROM read_parquet("
-        f"'{tmp_path}/orders.parquet/*.parquet')"
-    )
+    con = duckdb_connection(tmp_path)
     odf = con.execute(ACF_LJUNG_BOX_ORACLE).fetchdf()
     con.close()
     assert odf.r_ppm.isna().all() and odf.lb_q_scaled.isna().all()

@@ -12,14 +12,13 @@ from __future__ import annotations
 
 import pytest
 
-import duckdb
 
 from talkinghead_datapipeline_spark.queries.graph import (
     _SUPP_OFFSET,
     ASSORTATIVITY_ORACLE,
     degree_assortativity_trade,
 )
-from tests.oracle_harness import run_compare
+from tests.oracle_harness import duckdb_connection, run_compare
 
 
 def test_staged_oracle_matches(spark, sf_dir):
@@ -103,12 +102,7 @@ def _write_graph(spark, tmp_path, pairs):
 
 
 def _oracle_row(tmp_path):
-    con = duckdb.connect()
-    for t in ("orders", "lineitem"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet("
-            f"'{tmp_path}/{t}.parquet/*.parquet')"
-        )
+    con = duckdb_connection(tmp_path)
     row = con.execute(ASSORTATIVITY_ORACLE).fetchall()[0]
     con.close()
     return row

@@ -197,21 +197,12 @@ def test_gini_split_invariance_bit_exact(spark, sf_dir, tmp_path):
 
 
 def test_basket_split_invariance_bit_exact(spark, sf_dir, tmp_path):
-    from talkinghead_datapipeline_spark.catalog import load_table
-    from tests.oracle_harness import _canon_frame
+    from tests.oracle_harness import assert_split_invariance
 
-    # multi-table query: re-split lineitem, copy part as-is
-    load_table(spark, sf_dir, "lineitem").repartition(4).write.parquet(
-        str(tmp_path / "lineitem.parquet")
+    # multi-table query: both of its input tables are re-split
+    assert_split_invariance(
+        spark, sf_dir, tmp_path, basket_association_rules, "lineitem", "part"
     )
-    load_table(spark, sf_dir, "part").write.parquet(
-        str(tmp_path / "part.parquet")
-    )
-    base = _canon_frame(basket_association_rules(spark, sf_dir).toPandas())
-    split = _canon_frame(
-        basket_association_rules(spark, str(tmp_path)).toPandas()
-    )
-    assert base.equals(split)
 
 
 def test_conf_axis_invariance_bit_exact(spark, sf_dir):

@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import pytest
 
-import duckdb
 
 from talkinghead_datapipeline_spark.queries.graph import (
     _BFS_MAX_HOPS,
@@ -20,7 +19,7 @@ from talkinghead_datapipeline_spark.queries.graph import (
     BFS_HOPS_ORACLE,
     bfs_hops_trade_network,
 )
-from tests.oracle_harness import run_compare
+from tests.oracle_harness import duckdb_connection, run_compare
 
 
 def test_staged_oracle_matches(spark, sf_dir):
@@ -168,12 +167,7 @@ def test_crafted_chain_with_island(spark, tmp_path):
         for r in bfs_hops_trade_network(spark, str(tmp_path)).collect()
     }
     assert got == expect
-    con = duckdb.connect()
-    for t in ("orders", "lineitem", "customer", "supplier", "nation", "region"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet("
-            f"'{tmp_path}/{t}.parquet/*.parquet')"
-        )
+    con = duckdb_connection(tmp_path)
     orc = {(r[0], r[1]): r[2] for r in con.execute(BFS_HOPS_ORACLE).fetchall()}
     con.close()
     assert orc == expect

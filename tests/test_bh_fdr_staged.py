@@ -15,7 +15,7 @@ from talkinghead_datapipeline_spark.queries.stats_tests import (
     BH_FDR_ORACLE,
     bh_fdr_lang_source,
 )
-from tests.oracle_harness import run_compare
+from tests.oracle_harness import duckdb_connection, run_compare
 
 
 def test_staged_oracle_matches(spark, sf_dir):
@@ -92,8 +92,6 @@ def test_exp_tie_audit(spark, sf_dir):
 
 
 def test_crafted_overwhelming_cell(spark, tmp_path):
-    import duckdb
-
     # one cell where EVERY doc is long vs a corpus where none are: its
     # p-value underflows the ppb quantum -> guaranteed rank-1 rejection
     rows = [(i, "en", "srcA", "x" * 600) for i in range(40)]
@@ -110,11 +108,7 @@ def test_crafted_overwhelming_cell(spark, tmp_path):
     }
     assert out[("en", "srcA")]["rejected"] is True
     assert out[("en", "srcA")]["p_rank"] == 1
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM read_parquet("
-        f"'{tmp_path}/documents.parquet/*.parquet')"
-    )
+    con = duckdb_connection(tmp_path)
     odf = con.execute(BH_FDR_ORACLE).fetchdf()
     con.close()
     orow = odf[(odf.lang == "en") & (odf.source == "srcA")].iloc[0]

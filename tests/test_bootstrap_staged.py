@@ -66,19 +66,9 @@ def test_split_invariance(spark, sf_dir, tmp_path):
     """Fully exact by construction (hash-driven integer weights, BIGINT
     cent sums, single-division means): a 4-split re-write must reproduce
     the frame bit-for-bit, not merely within rounding."""
-    from talkinghead_datapipeline_spark.catalog import load_table
+    from tests.oracle_harness import assert_split_invariance
 
-    load_table(spark, sf_dir, "orders").repartition(4).write.parquet(
-        str(tmp_path / "orders.parquet")
-    )
-    canon = lambda pdf: (
-        pdf[sorted(pdf.columns)]
-        .sort_values(sorted(pdf.columns))
-        .reset_index(drop=True)
-    )
-    base = canon(bootstrap_ci_order_value(spark, sf_dir).toPandas())
-    split = canon(bootstrap_ci_order_value(spark, str(tmp_path)).toPandas())
-    assert base.equals(split)
+    assert_split_invariance(spark, sf_dir, tmp_path, bootstrap_ci_order_value, "orders")
 
 
 def test_percentile_interpolation_bit_equal_cross_engine(spark):

@@ -80,19 +80,9 @@ def test_plan_is_map_only(spark, sf_dir):
 
 
 def test_split_invariance(spark, sf_dir, tmp_path):
-    from talkinghead_datapipeline_spark.catalog import load_table
+    from tests.oracle_harness import assert_split_invariance
 
-    load_table(spark, sf_dir, "documents").repartition(4).write.parquet(
-        str(tmp_path / "documents.parquet")
-    )
-    canon = lambda pdf: (
-        pdf[sorted(pdf.columns)]
-        .sort_values(sorted(pdf.columns))
-        .reset_index(drop=True)
-    )
-    base = canon(doc_chunk_overlap(spark, sf_dir).toPandas())
-    split = canon(doc_chunk_overlap(spark, str(tmp_path)).toPandas())
-    assert base.equals(split)
+    assert_split_invariance(spark, sf_dir, tmp_path, doc_chunk_overlap, "documents")
 
 
 if __name__ == "__main__":

@@ -11,7 +11,6 @@ overflow-bound assertion from the staging comment.
 
 from __future__ import annotations
 
-import duckdb
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -19,7 +18,7 @@ from talkinghead_datapipeline_spark.queries.timeseries import (
     CUSUM_DRIFT_ORACLE,
     cusum_drift_daily,
 )
-from tests.oracle_harness import run_compare
+from tests.oracle_harness import duckdb_connection, run_compare
 
 
 def test_staged_oracle_matches(spark, sf_dir):
@@ -101,11 +100,7 @@ def _write_orders(spark, tmp_path, rows):
 
 
 def _oracle_rows(tmp_path):
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW orders AS SELECT * FROM read_parquet("
-        f"'{tmp_path}/orders.parquet/*.parquet')"
-    )
+    con = duckdb_connection(tmp_path)
     rows = con.execute(CUSUM_DRIFT_ORACLE).fetchall()
     con.close()
     return rows

@@ -21,7 +21,7 @@ from talkinghead_datapipeline_spark.queries.similarity import (
     _dbscan_proj_weights,
     dbscan_grid_roles,
 )
-from tests.oracle_harness import run_compare
+from tests.oracle_harness import duckdb_connection, run_compare
 
 
 def test_staged_oracle_matches(spark, sf_dir):
@@ -78,8 +78,6 @@ def test_role_mix_non_degenerate(spark, sf_dir):
 
 
 def test_crafted_geometry(spark, tmp_path):
-    import duckdb
-
     # Build embeddings whose projections land where we want: choose vectors
     # along the two projection rows so proj = (a, b) is controllable.
     w = _dbscan_proj_weights()
@@ -117,11 +115,7 @@ def test_crafted_geometry(spark, tmp_path):
     assert out[11]["role"] == "noise"
     assert out[11]["n_neighbors"] == 1
 
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT * FROM read_parquet("
-        f"'{tmp_path}/embeddings.parquet/*.parquet')"
-    )
+    con = duckdb_connection(tmp_path)
     odf = con.execute(DBSCAN_GRID_ORACLE).fetchdf().set_index("vec_id")
     con.close()
     for vid, r in out.items():

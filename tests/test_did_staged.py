@@ -12,13 +12,12 @@ from __future__ import annotations
 
 import datetime as dt
 
-import duckdb
 
 from talkinghead_datapipeline_spark.queries.behavior import (
     DIFF_IN_DIFF_ORACLE,
     diff_in_diff_order_value,
 )
-from tests.oracle_harness import run_compare
+from tests.oracle_harness import duckdb_connection, run_compare
 
 
 def test_staged_oracle_matches(spark, sf_dir):
@@ -73,12 +72,7 @@ def _write(spark, tmp_path, orders, customers):
 
 
 def _oracle_row(tmp_path):
-    con = duckdb.connect()
-    for t in ("orders", "customer"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet("
-            f"'{tmp_path}/{t}.parquet/*.parquet')"
-        )
+    con = duckdb_connection(tmp_path)
     row = con.execute(DIFF_IN_DIFF_ORACLE).fetchall()[0]
     con.close()
     return row

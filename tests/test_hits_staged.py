@@ -10,13 +10,12 @@ the int64 bound assertion from the staging comment.
 
 from __future__ import annotations
 
-import duckdb
 
 from talkinghead_datapipeline_spark.queries.graph import (
     HITS_ORACLE,
     hits_hubs_authorities,
 )
-from tests.oracle_harness import run_compare
+from tests.oracle_harness import duckdb_connection, run_compare
 
 
 def test_staged_oracle_matches(spark, sf_dir):
@@ -137,12 +136,7 @@ def test_crafted_star_graph(spark, tmp_path):
         (r for r in rows if r["role"] == "authority"), key=lambda r: r["rnk"]
     )
     assert [r["node"] for r in auth_by_rank] == ["B1", "B2", "B3"]
-    con = duckdb.connect()
-    for t in ("orders", "lineitem", "part"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet("
-            f"'{tmp_path}/{t}.parquet/*.parquet')"
-        )
+    con = duckdb_connection(tmp_path)
     orc = con.execute(HITS_ORACLE).fetchall()
     con.close()
     assert {(r[0], r[1]): r[2] for r in orc} == {

@@ -11,13 +11,12 @@ int64 bound assertion from the staging comment.
 
 from __future__ import annotations
 
-import duckdb
 
 from talkinghead_datapipeline_spark.queries.timeseries import (
     HOLT_FORECAST_ORACLE,
     holt_linear_forecast_daily,
 )
-from tests.oracle_harness import run_compare
+from tests.oracle_harness import duckdb_connection, run_compare
 
 
 def test_staged_oracle_matches(spark, sf_dir):
@@ -95,11 +94,7 @@ def _write_orders(spark, tmp_path, day_values):
 
 
 def _oracle_rows(tmp_path):
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW orders AS SELECT * FROM read_parquet("
-        f"'{tmp_path}/orders.parquet/*.parquet')"
-    )
+    con = duckdb_connection(tmp_path)
     rows = con.execute(HOLT_FORECAST_ORACLE).fetchall()
     con.close()
     return rows

@@ -16,7 +16,7 @@ from talkinghead_datapipeline_spark.queries.behavior import (
     KAPLAN_MEIER_ORACLE,
     kaplan_meier_survival,
 )
-from tests.oracle_harness import run_compare
+from tests.oracle_harness import duckdb_connection, run_compare
 
 
 def test_staged_oracle_matches(spark, sf_dir):
@@ -84,8 +84,6 @@ def _write_events(spark, tmp_path, rows):
 def test_crafted_boundaries(spark, tmp_path):
     import datetime as dt
 
-    import duckdb
-
     t0 = dt.datetime(2026, 1, 1)
 
     # corpus A: every user purchases at their first event -> one step at
@@ -99,11 +97,7 @@ def test_crafted_boundaries(spark, tmp_path):
     assert rows[0]["t_hours"] == 0
     assert rows[0]["n_at_risk"] == 5 and rows[0]["d_events"] == 5
     assert rows[0]["km_survival_ppb"] == 0
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM read_parquet("
-        f"'{tmp_path}/events.parquet/*.parquet')"
-    )
+    con = duckdb_connection(tmp_path)
     o = con.execute(KAPLAN_MEIER_ORACLE).fetchall()
     assert o == [(0, 5, 5, 0)]
     con.close()
@@ -114,11 +108,7 @@ def test_crafted_boundaries(spark, tmp_path):
         [(i, i, "view", 1.0, t0 + dt.timedelta(hours=i)) for i in range(5)],
     )
     assert kaplan_meier_survival(spark, str(tmp_path)).count() == 0
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM read_parquet("
-        f"'{tmp_path}/events.parquet/*.parquet')"
-    )
+    con = duckdb_connection(tmp_path)
     assert con.execute(KAPLAN_MEIER_ORACLE).fetchall() == []
     con.close()
 

@@ -11,14 +11,13 @@ from __future__ import annotations
 
 import hashlib
 
-import duckdb
 
 from talkinghead_datapipeline_spark.queries.sketches import (
     _KMV_K,
     KMV_ORACLE,
     kmv_distinct_intersection,
 )
-from tests.oracle_harness import run_compare
+from tests.oracle_harness import duckdb_connection, run_compare
 
 
 def test_staged_oracle_matches(spark, sf_dir):
@@ -104,11 +103,7 @@ def test_crafted_exact_below_k(spark, tmp_path):
     assert row["n_common"] == 20
     assert row["jaccard_ppm"] == (20 * 1_000_000) // 60
     assert row["est_intersection"] == (20 * 60) // 60 == 20
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM read_parquet("
-        f"'{tmp_path}/events.parquet/*.parquet')"
-    )
+    con = duckdb_connection(tmp_path)
     orc = con.execute(KMV_ORACLE).fetchdf().iloc[0]
     con.close()
     assert int(orc["est_union"]) == 60 and int(orc["est_intersection"]) == 20

@@ -18,7 +18,7 @@ from talkinghead_datapipeline_spark.queries.behavior import (
     LOGRANK_ORACLE,
     logrank_segment_survival,
 )
-from tests.oracle_harness import run_compare
+from tests.oracle_harness import duckdb_connection, run_compare
 
 
 def test_staged_oracle_matches(spark, sf_dir):
@@ -106,8 +106,6 @@ def _write(spark, tmp_path, events, customers):
 def test_crafted_maximal_separation(spark, tmp_path):
     import datetime as dt
 
-    import duckdb
-
     t0 = dt.datetime(2026, 1, 1)
     # cohort 1 (AUTOMOBILE < 'F') converts at its first event; cohort 0
     # (MACHINERY) is observed for 5 hours and never converts
@@ -127,12 +125,7 @@ def test_crafted_maximal_separation(spark, tmp_path):
     assert row["e1_ppm"] == (5 * 5 * 1_000_000) // 10
     assert row["v_ppm"] == (5 * 5 * 5 * 5 * 1_000_000) // (10 * 10 * 9)
     assert row["chi2_micro"] is not None and row["chi2_micro"] > 3_840_000
-    con = duckdb.connect()
-    for t in ("events", "customer"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet("
-            f"'{tmp_path}/{t}.parquet/*.parquet')"
-        )
+    con = duckdb_connection(tmp_path)
     o = con.execute(LOGRANK_ORACLE).fetchone()
     con.close()
     assert o == (
@@ -144,8 +137,6 @@ def test_crafted_maximal_separation(spark, tmp_path):
 def test_crafted_single_cohort_null_guard(spark, tmp_path):
     import datetime as dt
 
-    import duckdb
-
     t0 = dt.datetime(2026, 1, 1)
     # only cohort 1 exists -> n0 = 0 at every step -> v_ppm = 0 -> NULL chi2
     events = [(i, i, "purchase", 1.0, t0 + dt.timedelta(hours=i))
@@ -155,12 +146,7 @@ def test_crafted_single_cohort_null_guard(spark, tmp_path):
     row = logrank_segment_survival(spark, str(tmp_path)).collect()[0]
     assert row["v_ppm"] == 0
     assert row["chi2_micro"] is None
-    con = duckdb.connect()
-    for t in ("events", "customer"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet("
-            f"'{tmp_path}/{t}.parquet/*.parquet')"
-        )
+    con = duckdb_connection(tmp_path)
     o = con.execute(LOGRANK_ORACLE).fetchdf().iloc[0]
     con.close()
     assert int(o["v_ppm"]) == 0

@@ -15,7 +15,7 @@ from talkinghead_datapipeline_spark.queries.mlstats import (
     LOGREG_NEWTON_ORACLE,
     logreg_newton_lang,
 )
-from tests.oracle_harness import run_compare
+from tests.oracle_harness import duckdb_connection, run_compare
 
 
 def test_staged_oracle_matches(spark, sf_dir):
@@ -60,15 +60,8 @@ def test_boundary_margins_comfortable(spark, sf_dir):
     relative to the measured cross-engine/layout divergence (~1e-12):
     re-derive the unrounded coefficients from the oracle and assert
     margin >= 1e-9 (1000x the divergence), the covariance-audit floor."""
-    import duckdb
 
-    from talkinghead_datapipeline_spark.catalog import table_path
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM read_parquet('%s')"
-        % table_path(sf_dir, "documents")
-    )
+    con = duckdb_connection(sf_dir)
     raw_sql = LOGREG_NEWTON_ORACLE.replace(
         "round(b0, 6) AS beta0, round(b1, 6) AS beta1", "b0 AS beta0, b1 AS beta1"
     )
@@ -88,11 +81,9 @@ def test_split_invariance(spark, sf_dir, tmp_path):
     re-write of documents must reproduce the rounded coefficients exactly
     (the per-iteration sums ARE accumulation-order-dependent; the
     audited round(,6) margins absorb it)."""
-    from talkinghead_datapipeline_spark.catalog import load_table
+    from tests.oracle_harness import write_split_fixture
 
-    load_table(spark, sf_dir, "documents").repartition(4).write.parquet(
-        str(tmp_path / "documents.parquet")
-    )
+    write_split_fixture(spark, sf_dir, tmp_path, ["documents"])
     base = logreg_newton_lang(spark, sf_dir).toPandas()
     split = logreg_newton_lang(spark, str(tmp_path)).toPandas()
     assert base.equals(split)

@@ -14,14 +14,13 @@ import pytest
 import datetime as dt
 from fractions import Fraction
 
-import duckdb
 
 from talkinghead_datapipeline_spark.queries.graph import (
     _SUPP_OFFSET,
     MODULARITY_ORACLE,
     modularity_nation_partition,
 )
-from tests.oracle_harness import run_compare
+from tests.oracle_harness import duckdb_connection, run_compare
 
 
 def test_staged_oracle_matches(spark, sf_dir):
@@ -127,12 +126,7 @@ def _write_graph(spark, tmp_path, pairs, cust_nation, supp_nation):
 
 
 def _oracle_rows(tmp_path):
-    con = duckdb.connect()
-    for t in ("orders", "lineitem", "customer", "supplier"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet("
-            f"'{tmp_path}/{t}.parquet/*.parquet')"
-        )
+    con = duckdb_connection(tmp_path)
     rows = con.execute(MODULARITY_ORACLE).fetchall()
     con.close()
     return rows

@@ -13,13 +13,12 @@ from __future__ import annotations
 
 import pytest
 
-import duckdb
 
 from talkinghead_datapipeline_spark.queries.mlstats import (
     OOF_TARGET_ENCODING_ORACLE,
     oof_target_encoding_segment,
 )
-from tests.oracle_harness import run_compare
+from tests.oracle_harness import duckdb_connection, run_compare
 
 
 def test_staged_oracle_matches(spark, sf_dir):
@@ -154,12 +153,7 @@ def test_degenerate_single_fold_segment(spark, tmp_path):
     non_f3 = [k for k, f in zip(range(10, 60), seg1_folds) if f != f3]
     prior = (len(non_f3) * 10_000 * 10_000) // len(non_f3)  # all 100.00
     assert r["oof_smoothed_micro"] == prior
-    con = duckdb.connect()
-    for t in ("orders", "customer"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet("
-            f"'{tmp_path}/{t}.parquet/*.parquet')"
-        )
+    con = duckdb_connection(tmp_path)
     orc = {
         (row[0], row[1]): row
         for row in con.execute(OOF_TARGET_ENCODING_ORACLE).fetchall()

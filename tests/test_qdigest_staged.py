@@ -11,7 +11,6 @@ full-collapse extremes on both engines.
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 from talkinghead_datapipeline_spark.queries.sketches import (
@@ -22,7 +21,7 @@ from talkinghead_datapipeline_spark.queries.sketches import (
     QDIGEST_ORACLE,
     qdigest_rank_certified,
 )
-from tests.oracle_harness import run_compare
+from tests.oracle_harness import duckdb_connection, run_compare
 
 
 def test_staged_oracle_matches(spark, sf_dir):
@@ -229,11 +228,7 @@ def test_crafted_extremes(spark, crafted_dir):
         if r["depth_level"] < _QD_DEPTH:
             assert r["cnt"] <= t
     # DuckDB agrees bit-for-bit on the crafted corpus
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW orders AS SELECT * FROM read_parquet("
-        f"'{crafted_dir}/orders.parquet/*.parquet')"
-    )
+    con = duckdb_connection(crafted_dir)
     odf = con.execute(QDIGEST_ORACLE).fetchdf()
     con.close()
     assert len(odf) == len(rows)

@@ -1,6 +1,7 @@
 """Machine-check the cross-engine quantile-interpolation boundary.
 
-Found by the r12 full-registry x4 differential (tools/x4_differential.py),
+Found by the r12 full-registry x4 differential (now tools/differential.py
+--replicas 4),
 root-caused this round: on a TIE PLATEAU (both interpolation endpoints
 equal to the same value v), Spark's ``percentile`` computes
 ``lo + g*(hi - lo)`` = v EXACTLY, while DuckDB's ``quantile_cont`` computes
@@ -28,6 +29,7 @@ import struct
 import duckdb
 import numpy as np
 from pyspark.sql import functions as F
+from tests.oracle_harness import duckdb_connection
 
 
 def _bits(x: float) -> int:
@@ -63,7 +65,7 @@ def test_boundary_inactive_at_certified_sf(spark, sf_dir):
     """Every registered percentile input must be bit-identical across the
     engines at the certified SF (winsorized p01/p99 per flag, range-join
     p95 per user) — the x4 activation stays an adversarial-regime fact."""
-    from talkinghead_datapipeline_spark.catalog import load_table, table_path
+    from talkinghead_datapipeline_spark.catalog import load_table
 
     li = load_table(spark, sf_dir, "lineitem")
     sp = {
@@ -75,11 +77,7 @@ def test_boundary_inactive_at_certified_sf(spark, sf_dir):
         )
         .collect()
     }
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW lineitem AS SELECT * FROM read_parquet("
-        f"'{table_path(sf_dir, 'lineitem')}')"
-    )
+    con = duckdb_connection(sf_dir)
     for flag, (p01, p99) in sp.items():
         d01, d99 = con.execute(
             "SELECT quantile_cont(l_extendedprice, 0.01),"
@@ -98,11 +96,7 @@ def test_boundary_inactive_at_certified_sf(spark, sf_dir):
         .agg(F.percentile("value", F.lit(0.95)).alias("p95"))
         .collect()
     }
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM read_parquet("
-        f"'{table_path(sf_dir, 'events')}')"
-    )
+    con = duckdb_connection(sf_dir)
     dk95 = dict(
         con.execute(
             "SELECT user_id, quantile_cont(value, 0.95) FROM events GROUP BY 1"

@@ -13,13 +13,12 @@ from __future__ import annotations
 import math
 import re
 
-import duckdb
 
 from talkinghead_datapipeline_spark.queries.textops import (
     READABILITY_ORACLE,
     readability_fk_per_lang,
 )
-from tests.oracle_harness import run_compare
+from tests.oracle_harness import duckdb_connection, run_compare
 
 
 def test_staged_oracle_matches(spark, sf_dir):
@@ -109,11 +108,7 @@ def test_crafted_hand_counted(spark, tmp_path):
             got["xx"]["sum_syllables"]) == (2, 1, 2)
     assert (got["yy"]["sum_sentences"], got["yy"]["sum_syllables"]) == (1, 2)
     assert got["zz"]["sum_sentences"] == 1
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM read_parquet("
-        f"'{tmp_path}/documents.parquet/*.parquet')"
-    )
+    con = duckdb_connection(tmp_path)
     orc = {r[0]: r for r in con.execute(READABILITY_ORACLE).fetchall()}
     con.close()
     assert orc["en"][2:5] == (6, 2, 6)

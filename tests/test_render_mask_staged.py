@@ -20,7 +20,7 @@ from talkinghead_datapipeline_spark.queries.inference_nodes import (
     N17_RENDER_MASK_ORACLE,
     n17_render_mask_zbuffer,
 )
-from tests.oracle_harness import run_compare
+from tests.oracle_harness import duckdb_connection, run_compare
 
 
 def test_staged_oracle_matches(spark, sf_dir):
@@ -102,8 +102,6 @@ def _write_embeddings(spark, tmp_path, rows):
 
 
 def test_crafted_corpus_template_and_degenerate(spark, tmp_path):
-    import duckdb
-
     # row 0: zero betas (template mesh at probe pose), unit cam — real mask
     # row 1: s = 0 collapses every vertex to the pixel (0,0) ray — every
     #        face degenerate, empty mask, NULL z extrema on BOTH engines
@@ -123,11 +121,7 @@ def test_crafted_corpus_template_and_degenerate(spark, tmp_path):
     assert out[0]["mask_pixels"] > 0 and out[2]["mask_pixels"] > 0
     assert out[0]["mask_pixels"] != out[2]["mask_pixels"]  # cam moved the mesh
 
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT * FROM read_parquet("
-        f"'{tmp_path}/embeddings.parquet/*.parquet')"
-    )
+    con = duckdb_connection(tmp_path)
     odf = con.execute(N17_RENDER_MASK_ORACLE).fetchdf().set_index("vec_id")
     con.close()
     for vid, row in out.items():

@@ -18,7 +18,7 @@ from talkinghead_datapipeline_spark.queries.inference_nodes import (
     N17_RENDER_SHADE_ORACLE,
     n17_render_shaded_checksum,
 )
-from tests.oracle_harness import run_compare
+from tests.oracle_harness import duckdb_connection, run_compare
 
 
 def test_staged_oracle_matches(spark, sf_dir):
@@ -140,11 +140,7 @@ def test_crafted_corpus_degenerate_and_match(spark, tmp_path):
     assert out[1]["shade_min_micro"] is None
     assert out[0]["covered_pixels"] > 0 and out[2]["covered_pixels"] > 0
 
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT * FROM read_parquet("
-        f"'{tmp_path}/embeddings.parquet/*.parquet')"
-    )
+    con = duckdb_connection(tmp_path)
     odf = con.execute(N17_RENDER_SHADE_ORACLE).fetchdf().set_index("vec_id")
     con.close()
     for vid, row in out.items():

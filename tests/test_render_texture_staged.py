@@ -18,7 +18,7 @@ from talkinghead_datapipeline_spark.queries.inference_nodes import (
     N17_RENDER_TEXTURE_ORACLE,
     n17_render_texture_checksum,
 )
-from tests.oracle_harness import run_compare
+from tests.oracle_harness import duckdb_connection, run_compare
 
 
 def test_staged_oracle_matches(spark, sf_dir):
@@ -89,8 +89,6 @@ def test_channel_chains_match_sh_irradiance():
 
 
 def test_crafted_degenerate_and_match(spark, tmp_path):
-    import duckdb
-
     emb0 = [0.0] * 22 + [1.0, 0.0, 0.0] + [0.0] * 39
     emb1 = [0.0] * 22 + [0.0, 5.0, -5.0] + [0.0] * 39  # s=0: empty coverage
     emb2 = [0.9] * 22 + [-0.6, 0.3, -0.2] + [0.0] * 39
@@ -107,11 +105,7 @@ def test_crafted_degenerate_and_match(spark, tmp_path):
     assert out[1]["tex_min_micro"] is None
     assert out[0]["covered_pixels"] > 0 and out[2]["covered_pixels"] > 0
 
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT * FROM read_parquet("
-        f"'{tmp_path}/embeddings.parquet/*.parquet')"
-    )
+    con = duckdb_connection(tmp_path)
     odf = con.execute(N17_RENDER_TEXTURE_ORACLE).fetchdf().set_index("vec_id")
     con.close()
     for vid, row in out.items():

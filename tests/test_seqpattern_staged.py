@@ -12,14 +12,13 @@ from __future__ import annotations
 
 import datetime as dt
 
-import duckdb
 
 from talkinghead_datapipeline_spark.queries.behavior import (
     _SEQ_GAP_US,
     SEQ_PATTERN_ORACLE,
     seq_pattern_maxgap_support,
 )
-from tests.oracle_harness import run_compare
+from tests.oracle_harness import duckdb_connection, run_compare
 
 
 def test_staged_oracle_matches(spark, sf_dir):
@@ -111,11 +110,7 @@ def test_crafted_gap_semantics(spark, tmp_path):
     assert got[("click", "purchase")] == (1, 1)
     assert got[("view", "view")] == (1, 1)  # user4's view@0 -> view@5
     assert ("purchase", "view") not in got
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM read_parquet("
-        f"'{tmp_path}/events.parquet/*.parquet')"
-    )
+    con = duckdb_connection(tmp_path)
     orc = {
         (r[0], r[1]): (r[2], r[3])
         for r in con.execute(SEQ_PATTERN_ORACLE).fetchall()

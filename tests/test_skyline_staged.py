@@ -12,13 +12,12 @@ point).
 
 from __future__ import annotations
 
-import duckdb
 
 from talkinghead_datapipeline_spark.queries.relational import (
     PARETO_SKYLINE_ORACLE,
     pareto_skyline_parts,
 )
-from tests.oracle_harness import run_compare
+from tests.oracle_harness import duckdb_connection, run_compare
 
 
 def test_staged_oracle_matches(spark, sf_dir):
@@ -74,11 +73,7 @@ def _write_part(spark, tmp_path, rows):
 
 
 def _oracle_rows(tmp_path):
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW part AS SELECT * FROM read_parquet("
-        f"'{tmp_path}/part.parquet/*.parquet')"
-    )
+    con = duckdb_connection(tmp_path)
     rows = con.execute(PARETO_SKYLINE_ORACLE).fetchall()
     con.close()
     return rows

@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import math
 
-import duckdb
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -20,7 +19,7 @@ from talkinghead_datapipeline_spark.queries.stats_tests import (
     SPEARMAN_ORACLE,
     spearman_rank_corr_lang,
 )
-from tests.oracle_harness import run_compare
+from tests.oracle_harness import duckdb_connection, run_compare
 
 
 def test_staged_oracle_matches(spark, sf_dir):
@@ -122,11 +121,7 @@ def test_crafted_monotone_reversed_constant(spark, tmp_path):
     assert got["up"][3] == 1_000_000
     assert got["dn"][3] == -1_000_000
     assert got["ct"][1] == 0 and got["ct"][3] is None
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM read_parquet("
-        f"'{tmp_path}/documents.parquet/*.parquet')"
-    )
+    con = duckdb_connection(tmp_path)
     orc = {r[0]: r for r in con.execute(SPEARMAN_ORACLE).fetchall()}
     con.close()
     assert orc["up"][5] == 1_000_000

@@ -17,8 +17,8 @@ from __future__ import annotations
 
 import pytest
 
-from talkinghead_datapipeline_spark.catalog import TPCH_TABLES, load_table
 from talkinghead_datapipeline_spark.queries import all_queries
+from tests.oracle_harness import compare_frames, conf_axes, write_split_fixture
 
 # Heavy tier: skipped unless SPARK_GRAFT_SLOW=1 (see conftest; VERDICT r14 #3)
 pytestmark = pytest.mark.slow
@@ -109,26 +109,24 @@ _REPRESENTATIVES = (
 
 @pytest.fixture(scope="module")
 def split_sf_dir(spark, sf_dir, tmp_path_factory):
-    out = tmp_path_factory.mktemp("sf_split")
-    for name in TPCH_TABLES:
-        df = load_table(spark, sf_dir, name)
-        # Round-robin into 4 files: different per-file row sets AND a
-        # different within-file order than the source.
-        df.repartition(4).write.parquet(str(out / f"{name}.parquet"))
-    return str(out)
+    return write_split_fixture(spark, sf_dir, tmp_path_factory.mktemp("sf_split"))
+
+
+def _frames(spark, sf_dir, *axes):
+    with conf_axes(spark, *axes):
+        return {n: _SPECS[n].spark(spark, sf_dir).toPandas() for n in _REPRESENTATIVES}
+
+
+def _diverged(base, alt):
+    return [n for n in _REPRESENTATIVES if not compare_frames(n, alt[n], base[n]).ok]
 
 
 @pytest.mark.parametrize("name", _REPRESENTATIVES)
 def test_result_is_invariant_to_input_splits(spark, sf_dir, split_sf_dir, name):
     base = _SPECS[name].spark(spark, sf_dir).toPandas()
     split = _SPECS[name].spark(spark, split_sf_dir).toPandas()
-    cols = sorted(base.columns)
-    base = base[cols].sort_values(cols).reset_index(drop=True)
-    split = split[cols].sort_values(cols).reset_index(drop=True)
-    assert base.equals(split), (
-        f"{name}: output depends on input file layout\n"
-        f"single-file rows={len(base)} 4-split rows={len(split)}"
-    )
+    res = compare_frames(name, split, base)
+    assert res.ok, f"{name}: output depends on input file layout\n{res}"
 
 
 def test_result_is_invariant_to_shuffle_partition_count(spark, sf_dir):
@@ -136,24 +134,8 @@ def test_result_is_invariant_to_shuffle_partition_count(spark, sf_dir):
     so partial-aggregate MERGE order varies run to run on a cluster even
     with a fixed file layout. Re-running the representative set with
     spark.sql.shuffle.partitions=7 (vs the session's core-count default)
-    must reproduce every frame exactly. Restores the conf even on failure
-    — a leaked setting would skew every later test in the shared session."""
-    def run_all():
-        out = {}
-        for name in _REPRESENTATIVES:
-            pdf = _SPECS[name].spark(spark, sf_dir).toPandas()
-            cols = sorted(pdf.columns)
-            out[name] = pdf[cols].sort_values(cols).reset_index(drop=True)
-        return out
-
-    default = spark.conf.get("spark.sql.shuffle.partitions")
-    base = run_all()
-    spark.conf.set("spark.sql.shuffle.partitions", "7")
-    try:
-        alt = run_all()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", default)
-    diverged = [n for n in _REPRESENTATIVES if not base[n].equals(alt[n])]
+    must reproduce every frame exactly."""
+    diverged = _diverged(_frames(spark, sf_dir), _frames(spark, sf_dir, "partitions"))
     assert not diverged, f"shuffle-count-dependent results: {diverged}"
 
 
@@ -163,22 +145,6 @@ def test_result_is_invariant_to_aqe_toggle(spark, sf_dir):
     join physical shape, and a cluster flips between these plans run to
     run. Toggling spark.sql.adaptive.enabled must reproduce every
     representative frame exactly (probed clean over the full pinned set
-    before pinning). Restores the conf even on failure."""
-    def run_all():
-        out = {}
-        for name in _REPRESENTATIVES:
-            pdf = _SPECS[name].spark(spark, sf_dir).toPandas()
-            cols = sorted(pdf.columns)
-            out[name] = pdf[cols].sort_values(cols).reset_index(drop=True)
-        return out
-
-    default = spark.conf.get("spark.sql.adaptive.enabled")
-    flipped = "false" if default == "true" else "true"
-    base = run_all()
-    spark.conf.set("spark.sql.adaptive.enabled", flipped)
-    try:
-        alt = run_all()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", default)
-    diverged = [n for n in _REPRESENTATIVES if not base[n].equals(alt[n])]
+    before pinning)."""
+    diverged = _diverged(_frames(spark, sf_dir), _frames(spark, sf_dir, "aqe"))
     assert not diverged, f"AQE-dependent results: {diverged}"

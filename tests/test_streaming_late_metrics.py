@@ -42,7 +42,7 @@ from talkinghead_datapipeline_spark.queries.streaming_queries import (
 from talkinghead_datapipeline_spark.streaming.incremental import (
     run_available_now_with_metrics,
 )
-from tests.oracle_harness import run_compare
+from tests.oracle_harness import duckdb_connection, run_compare
 
 # Heavy tier: skipped unless SPARK_GRAFT_SLOW=1 (see conftest; VERDICT r14 #3)
 pytestmark = pytest.mark.slow
@@ -207,15 +207,8 @@ def test_lag_model_is_observable_not_vacuous(spark, sf_dir):
     178 at sf0.01). If this assertion ever fails, the fixture stopped
     exercising the lag and the oracle's main pin is no longer evidenced
     end-to-end."""
-    import duckdb
 
-    from talkinghead_datapipeline_spark.catalog import table_path
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM read_parquet('%s')"
-        % table_path(sf_dir, "events")
-    )
+    con = duckdb_connection(sf_dir)
     lag1, lag0 = con.execute(
         """
         WITH e AS (SELECT epoch_us(ts) AS us, user_id FROM events),
@@ -253,11 +246,9 @@ def test_split_invariance(spark, sf_dir, tmp_path):
     table's physical layout. Also exercises the staged query's catalog
     read against a DIRECTORY-layout table (the round-8 landing-dir bug
     class)."""
-    from talkinghead_datapipeline_spark.catalog import load_table
+    from tests.oracle_harness import write_split_fixture
 
-    load_table(spark, sf_dir, "events").repartition(4).write.parquet(
-        str(tmp_path / "events.parquet")
-    )
+    write_split_fixture(spark, sf_dir, tmp_path, ["events"])
     base = streaming_late_data_metrics(spark, sf_dir).toPandas()
     split = streaming_late_data_metrics(spark, str(tmp_path)).toPandas()
     assert base.equals(split)

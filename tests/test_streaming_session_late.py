@@ -195,20 +195,10 @@ def test_split_invariance(spark, sf_dir, tmp_path):
     batch membership is integer arithmetic on epoch micros (layout-free)
     and the landing-dir staging coalesces per batch, so neither the
     metrics nor the emitted session set may move."""
-    from talkinghead_datapipeline_spark.catalog import load_table
+    from tests.oracle_harness import assert_split_invariance
 
-    load_table(spark, sf_dir, "events").repartition(4).write.parquet(
-        str(tmp_path / "events.parquet")
-    )
-    canon = lambda pdf: (
-        pdf[sorted(pdf.columns)]
-        .sort_values(sorted(pdf.columns))
-        .reset_index(drop=True)
-    )
     for fn in (streaming_session_late_metrics, streaming_session_late_sink):
-        base = canon(fn(spark, sf_dir).toPandas())
-        split = canon(fn(spark, str(tmp_path)).toPandas())
-        assert base.equals(split), fn.__name__
+        assert_split_invariance(spark, sf_dir, tmp_path, fn, "events")
 
 
 if __name__ == "__main__":

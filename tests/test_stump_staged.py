@@ -14,7 +14,6 @@ from __future__ import annotations
 import math
 from fractions import Fraction
 
-import duckdb
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -22,7 +21,7 @@ from talkinghead_datapipeline_spark.queries.mlstats import (
     DECISION_STUMP_ORACLE,
     decision_stump_split_scores,
 )
-from tests.oracle_harness import run_compare
+from tests.oracle_harness import duckdb_connection, run_compare
 
 
 def test_staged_oracle_matches(spark, sf_dir):
@@ -129,11 +128,7 @@ def test_crafted_perfect_separation(spark, tmp_path):
     assert best["gain_ppb"] == 500_000_000
     assert best["threshold"] == 14  # max of the low cluster
     assert best["pos_l"] == 0 and best["pos_r"] == 50
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM read_parquet("
-        f"'{tmp_path}/documents.parquet/*.parquet')"
-    )
+    con = duckdb_connection(tmp_path)
     orc = con.execute(DECISION_STUMP_ORACLE).fetchall()
     con.close()
     ob = [r for r in orc if r[7] == 1][0]

@@ -9,12 +9,11 @@ operator.
 
 from __future__ import annotations
 
-import duckdb
 import pandas as pd
 import pytest
 
 from talkinghead_datapipeline_spark.queries import all_queries
-from tests.oracle_harness import compare_frames
+from tests.oracle_harness import compare_frames, duckdb_connection
 
 _SPECS = all_queries()
 
@@ -32,12 +31,8 @@ def _diff_on(spark, tmp_path, name: str, docs: pd.DataFrame):
     )
     spec = _SPECS[name]
     spark_pdf = spec.spark(spark, str(tmp_path)).toPandas()
-    con = duckdb.connect()
+    con = duckdb_connection(tmp_path)
     try:
-        con.execute(
-            "CREATE VIEW documents AS SELECT * FROM "
-            f"read_parquet('{tmp_path}/documents.parquet')"
-        )
         oracle_pdf = con.execute(spec.oracle).fetchdf()
     finally:
         con.close()

@@ -15,7 +15,7 @@ from talkinghead_datapipeline_spark.queries.graph import (
     TRIANGLE_ORACLE,
     triangle_count_brand_graph,
 )
-from tests.oracle_harness import run_compare
+from tests.oracle_harness import duckdb_connection, run_compare
 
 
 def test_staged_oracle_matches(spark, sf_dir):
@@ -87,8 +87,6 @@ def _write_graph(spark, tmp_path, orders_brands):
 
 
 def test_crafted_triangle_plus_pendant(spark, tmp_path):
-    import duckdb
-
     # every order carries a full co-purchase set, so all listed pairs pass
     # any gate: triangle A-B-C plus pendant edge C-D
     _write_graph(
@@ -102,12 +100,7 @@ def test_crafted_triangle_plus_pendant(spark, tmp_path):
     # deg: A2 B2 C3 D1 -> wedges 1+1+3+0 = 5
     assert row["n_wedges"] == 5
     assert row["clustering_ppm"] == (3 * 1 * 1_000_000) // 5
-    con = duckdb.connect()
-    for t in ("lineitem", "part"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet("
-            f"'{tmp_path}/{t}.parquet/*.parquet')"
-        )
+    con = duckdb_connection(tmp_path)
     assert con.execute(TRIANGLE_ORACLE).fetchone() == (
         4, 4, 1, 5, 600000,
     )
@@ -115,19 +108,12 @@ def test_crafted_triangle_plus_pendant(spark, tmp_path):
 
 
 def test_crafted_zero_wedges_null_guard(spark, tmp_path):
-    import duckdb
-
     # two disjoint edges -> every degree 1 -> zero wedges -> NULL coefficient
     _write_graph(spark, tmp_path, [(1, ["A", "B"]), (2, ["C", "D"])])
     row = triangle_count_brand_graph(spark, str(tmp_path)).collect()[0]
     assert row["n_wedges"] == 0 and row["n_triangles"] == 0
     assert row["clustering_ppm"] is None
-    con = duckdb.connect()
-    for t in ("lineitem", "part"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet("
-            f"'{tmp_path}/{t}.parquet/*.parquet')"
-        )
+    con = duckdb_connection(tmp_path)
     o = con.execute(TRIANGLE_ORACLE).fetchdf().iloc[0]
     con.close()
     assert int(o["n_wedges"]) == 0

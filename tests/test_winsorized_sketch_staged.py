@@ -94,21 +94,11 @@ def test_split_invariance(spark, sf_dir, tmp_path):
     """The sketch itself may vary with merge order in principle, but the
     OUTPUT may not: exact quantiles are order-free and the flags must be
     1 under any layout for the contract to be certifiable at scale."""
-    from talkinghead_datapipeline_spark.catalog import load_table
+    from tests.oracle_harness import assert_split_invariance
 
-    load_table(spark, sf_dir, "lineitem").repartition(4).write.parquet(
-        str(tmp_path / "lineitem.parquet")
+    assert_split_invariance(
+        spark, sf_dir, tmp_path, winsorized_bounds_sketch_certified, "lineitem"
     )
-    canon = lambda pdf: (
-        pdf[sorted(pdf.columns)]
-        .sort_values(sorted(pdf.columns))
-        .reset_index(drop=True)
-    )
-    base = canon(winsorized_bounds_sketch_certified(spark, sf_dir).toPandas())
-    split = canon(
-        winsorized_bounds_sketch_certified(spark, str(tmp_path)).toPandas()
-    )
-    assert base.equals(split)
 
 
 if __name__ == "__main__":

@@ -31,16 +31,12 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import glob
 import json
 import math
-import os
 import re
 import sys
 import time
 from fractions import Fraction
-
-import duckdb
 
 sys.path.insert(0, ".")
 
@@ -212,6 +208,7 @@ def main() -> int:
     args = ap.parse_args()
 
     from talkinghead_datapipeline_spark.queries import all_queries
+    from tests.oracle_harness import duckdb_connection
 
     specs = all_queries()
     names = (
@@ -220,11 +217,8 @@ def main() -> int:
         else [n for n, s in specs.items() if s.oracle]
     )
 
-    con = duckdb.connect()
+    con = duckdb_connection(args.sf_dir)
     con.execute("CREATE MACRO __nr2(x, k) AS x")
-    for p in sorted(glob.glob(os.path.join(args.sf_dir, "*.parquet"))):
-        t = os.path.splitext(os.path.basename(p))[0]
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
     results, skipped = [], []
     for name in names:
